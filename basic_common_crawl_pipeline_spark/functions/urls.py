@@ -189,6 +189,11 @@ def canon_host_surt(
     if path.endswith("/") and not norm.endswith("/"):
         norm += "/"
     canon = urlunsplit((scheme, netloc, norm, parts.query, ""))
+    if canon[-1].isspace():
+        # whitespace before a dropped '#' survives into canon, and
+        # surt(canon) re-canonicalizes — re-strips, re-normalizes — it;
+        # delegate so the fused form stays equal to the composition
+        return canon, host, surt(canon)
     rev = host if ":" in host else ",".join(reversed(host.split(".")))
     if nondefault_port:
         rev += f":{port}"

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import round4
 from ..functions.textstats import norm_text, word_ngrams, word_tokens
-from .spread import spread_input
 
 
 def _hash64_expr(col):
@@ -60,16 +59,7 @@ def shingle_table(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
     """(id, shingle) distinct word-n-gram table — the input of MinHash and
-    of exact Jaccard.
-
-    The tokenize+shingle projection is the CPU-heavy part and runs at the
-    SCAN's parallelism: a small single-file parquet arrives as one split
-    (below openCostInBytes no splitting happens at all), serializing 5-6 s
-    of per-doc expression work through one task (measured on the bench
-    corpus). Spread few-FILE inputs to the session's shuffle width first
-    via the shared adaptive helper (operators/spread.py) — no-op for
-    many-file / non-file-backed / already-repartitioned inputs."""
-    df = spread_input(df, id_col)
+    of exact Jaccard."""
     return (
         df.select(
             F.col(id_col).alias("id"),
@@ -278,12 +268,6 @@ def incremental_dedup(
     ``cell_cap`` are excluded from pairing (``_cap_cells``), bounding
     the per-cell fan-out on boilerplate-heavy corpora."""
     k = bands * rows_per_band
-    # Adaptive spread (operators/spread.py): the fingerprint and shingle
-    # projections of BOTH sides are per-row-heavy; a 1-split scan would
-    # serialize them (shingle_table's own spread then no-ops on the
-    # already-repartitioned lineage).
-    new_df = spread_input(new_df, id_col)
-    old_df = spread_input(old_df, id_col)
 
     def fps(df: DataFrame) -> DataFrame:
         return df.select(
@@ -398,7 +382,6 @@ def simhash(
     Σ_tokens (2·bit_j(hash) − 1) > 0. Pure relational: explode tokens →
     per-bit signed sums → recombine. One shuffle (groupBy id).
     """
-    df = spread_input(df, id_col)
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(word_tokens(text_col)).alias("tok"),
@@ -536,9 +519,6 @@ def line_dedup(
     # escape it (re.escape backslash-quotes punctuation only, which Java
     # regex reads identically) — an unescaped '.', '|' or '\r\n'-style
     # caller value would otherwise split per-character or wrong.
-    # Adaptive spread first: the split+posexplode+hash projection is the
-    # per-row-heavy part and otherwise runs at a 1-split scan's width.
-    df = spread_input(df, id_col)
     sep_re = re.escape(sep)
     lines = df.select(
         F.col(id_col),
@@ -626,10 +606,6 @@ def span_dedup(
     """
     from pyspark.sql import Window
 
-    # Adaptive spread first: both derived tables (toks + grams) pay the
-    # tokenize/n-gram projection, which otherwise runs at a 1-split
-    # scan's width (operators/spread.py).
-    df = spread_input(df, id_col)
     toks = df.select(
         F.col(id_col),
         F.posexplode(word_tokens(text_col)).alias("__idx", "__tok"),

@@ -33,7 +33,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round4
-from .spread import spread_input
 
 RH_SEED = 7
 
@@ -261,10 +260,6 @@ def neardup_pairs(
         planes = random_hyperplanes(bands * rows_per_band)
     from .dedup import _cap_cells
 
-    # Adaptive spread (operators/spread.py): the signature and norm
-    # folds are per-row-heavy and otherwise run at a 1-split scan's
-    # width; no-op for many-split inputs.
-    df = spread_input(df)
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     sigs = (
         rh_signature(vecs, planes, vec_col="v").select("id", "sig").persist()
@@ -494,10 +489,6 @@ def ivf_assign(
     ``write_sig_partitioned`` does for signatures)."""
     if centroids is None:
         centroids = ivf_centroids()
-    # Adaptive spread (operators/spread.py): the 16-centroid fold chain
-    # is the heaviest per-row projection in the ANN family and otherwise
-    # runs at a 1-split scan's width; no-op for many-split inputs.
-    df = spread_input(df)
     # centroid norms are CONSTANTS — fold them driver-side
     # (bit-identical, see _py_norm); the 16 identical _norm(vec) folds
     # are shared by subexpression elimination, so each row pays ONE
@@ -924,9 +915,6 @@ def pq_encode(
     composition of the m×k fold tree cost ~6 s of pure driver time)."""
     if codebooks is None:
         codebooks = pq_codebooks()
-    # Adaptive spread (operators/spread.py): m fold trees per row —
-    # serial on a 1-split scan; no-op for many-split inputs.
-    df = spread_input(df)
     k = len(codebooks[0])
     m = len(codebooks)
     # three-step projection chain so every fold runs ONCE per row:
@@ -1153,10 +1141,6 @@ def kmeans_int(
     data loop, nothing crosses Arrow.
     """
     spark = df.sparkSession
-    # Adaptive spread (operators/spread.py): the persisted quantized
-    # frame inherits this width, so every round's k-fold assignment scan
-    # runs parallel instead of at a 1-split scan's width.
-    df = spread_input(df)
     q = df.select(
         F.col(id_col),
         F.transform(

@@ -49,7 +49,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textstats import word_tokens
-from .spread import spread_input
 
 
 def word_frequency_table(
@@ -57,9 +56,7 @@ def word_frequency_table(
 ) -> DataFrame:
     """The Zipf-collapsed training input: (word, freq) over the corpus.
     One explode + one map-side-combined hash aggregate; everything
-    downstream of this runs on distinct words only. The tokenize runs at
-    the scan's width — adaptively spread first (operators/spread.py)."""
-    df = spread_input(df)
+    downstream of this runs on distinct words only."""
     toks = df.select(F.explode(word_tokens(text_col)).alias("__t")).filter(
         F.col("__t") != ""
     )
@@ -303,7 +300,6 @@ def bpe_segment_words(
     untrained-BPE behavior — and counts into ``n_oov``. An inner join
     would silently drop OOV occurrences from every count and erase
     all-OOV documents from the output entirely."""
-    corpus = spread_input(corpus, id_col)
     toks = corpus.select(
         F.col(id_col), F.explode(word_tokens(text_col)).alias("__t")
     ).filter(F.col("__t") != "")
@@ -375,7 +371,6 @@ def bpe_encode(
     id."""
     if vocab is None:
         vocab = bpe_vocab(words)
-    corpus = spread_input(corpus, id_col)
     spark = corpus.sparkSession
     vocab_df = spark.createDataFrame(
         [(p, i) for i, p in enumerate(vocab)],

@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 
 from ..functions.textstats import word_ngrams, word_tokens
 from .ordering import check_pid_layout
-from .spread import spread_input
 
 
 def decontaminate(
@@ -64,12 +63,6 @@ def decontaminate(
     partially combines map-side before the doc-id shuffle (explode
     preserves row locality), and the corpus text never shuffles.
     Measured 3× faster than the two-scan + post-join variant at sf0.1."""
-    # Adaptive spread (operators/spread.py): the n-gram+md5 projection is
-    # the per-row-heavy part on both sides and otherwise runs at a
-    # 1-split scan's width. Corpus keyed by id (the groupBy below reuses
-    # the partitioning); the benchmark side has no id contract.
-    corpus = spread_input(corpus, id_col)
-    benchmark = spread_input(benchmark)
     grams = word_ngrams(text_col, n)
     bench = (
         benchmark.select(F.explode(grams).alias("__g"))
@@ -324,7 +317,6 @@ def unigram_lm_score(
     aggregate on the unique id (skew-free). Same two-pass
     corpus-statistic shape as ``decontaminate``, with the reference set
     derived from the corpus itself instead of a benchmark."""
-    df = spread_input(df, id_col)
     toks = (
         df.select(
             F.col(id_col), F.explode(word_tokens(text_col)).alias("__t")
@@ -455,7 +447,6 @@ def nb_quality_classifier(
     (doc_id, token) pairs flow into the per-doc aggregate on the unique
     id. No driver-side scalars anywhere: the weight needs only the
     token's own counts, so the whole fit is one aggregation."""
-    corpus = spread_input(corpus, id_col)
 
     def toks(df: DataFrame) -> DataFrame:
         return (

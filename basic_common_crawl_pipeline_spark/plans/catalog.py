@@ -23,7 +23,6 @@ from ..functions.numeric import SQL_CENTS, round4
 from ..operators import dedup, similarity
 from ..operators.ordering import with_global_seq
 from ..operators.politeness import select_per_host_topk
-from ..operators.spread import spread_input
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -54,6 +53,16 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     # timestamps as UTC, so this makes both engines agree by definition.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+
+
+def _load_wide(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """``load`` round-robined to the session's shuffle width. A fixture
+    table is one single-row-group file, so it scans as ONE split and
+    every per-row projection over it runs in one task. Call it only
+    where an interleaved local[4] A/B measured a win, recorded at the
+    call."""
+    df = load(spark, sf_dir, table)
+    return df.repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
 
 
 # ---------------------------------------------------------------------------
@@ -1146,7 +1155,8 @@ def text_decontaminate(spark, sf_dir):
     decontamination pass."""
     from ..operators.training import decontaminate
 
-    docs = load(spark, sf_dir, "documents")
+    # local[4] sf0.1 A/B: 5.10 -> 2.08 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 17 == 0)
     corpus = docs.filter(F.col("doc_id") % 17 != 0)
     return decontaminate(corpus, bench, n=5, min_matches=1)
@@ -1189,10 +1199,8 @@ def text_repetition(spark, sf_dir):
     any corpus size, while the oracle spells out the explode+groupBy
     the operator avoids. ``repetitive`` = top 2-gram covers ≥10% of ≥10
     gram occurrences — pure integer arithmetic, exact cross-engine."""
-    # Adaptive spread (operators/spread.py): the interpreted sort+fold is
-    # pure per-row work; round-robin balances it perfectly. A many-split
-    # input (real scale) keeps the zero-shuffle shape.
-    docs = spread_input(load(spark, sf_dir, "documents"))
+    # local[4] sf0.1 A/B: 6.17 -> 2.21 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     return (
         docs.withColumn("__s", ts.repetition_stats("text", n=2))
         .select(
@@ -1227,9 +1235,6 @@ def text_vocab_topk(spark, sf_dir):
     map-side partial combine (the shuffle carries one row per distinct
     token per partition, never per occurrence) → TakeOrderedAndProject.
     At 100 TB this is exactly the BPE-vocab counting job."""
-    # no spread: measured 0.25 -> 0.40 s with one at sf0.1 — the
-    # explode+partial-aggregate is cheap enough that the extra exchange
-    # stage dominates
     docs = load(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(ts.word_tokens("text")).alias("tok"))
@@ -1294,9 +1299,6 @@ def text_sequence_packing(spark, sf_dir):
     scale."""
     from ..operators.training import pack_token_stream
 
-    # no spread: measured 0.64 -> 0.74 s with one (same reasoning as
-    # text_token_budget_sample — one token count per row, range shuffle
-    # follows anyway)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", ts.token_count("text").cast("long").alias("n_tok")
@@ -1363,9 +1365,8 @@ def text_line_dedup(spark, sf_dir):
     survives. One hash-aggregate over the Zipf head + a mark join by
     60-bit line hash + a skew-free per-doc reassembly — the 100-TB
     shape of sub-document dedup."""
-    # spread BEFORE the line-structure synthesis (the per-row-heavy
-    # part); line_dedup's internal spread then no-ops on the lineage
-    docs = spread_input(load(spark, sf_dir, "documents"), "doc_id")
+    # local[4] sf0.1 A/B: 4.35 -> 2.23 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     toks = ts.word_tokens("text")
     nc = F.greatest(
         F.ceil(F.size(toks) / F.lit(4.0)).cast("long"), F.lit(1)
@@ -1469,7 +1470,8 @@ def text_span_dedup(spark, sf_dir):
     survivals, partial spans, and fully-duplicated docs → ''. Runs the
     default hot-gram-safe grouped mark (cached gram table, map-side
     combine — no per-gram window task; plan-pinned)."""
-    docs = load(spark, sf_dir, "documents")
+    # local[4] sf0.1 A/B: 6.43 -> 3.10 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     return dedup.span_dedup(docs, "doc_id", "text", n=5)
 
 
@@ -1636,9 +1638,9 @@ def text_pii_redact(spark, sf_dir):
     (an email, a phone number, an IPv4 address derived from doc_id) is
     appended deterministically on BOTH engines, then masked with typed
     placeholders and counted. Pure JVM regexp_replace/regexp_count over
-    one scan — a narrow, shuffle-free map at any corpus size (the
-    adaptive spread only widens a degenerate 1-split local scan)."""
-    docs = spread_input(load(spark, sf_dir, "documents"))
+    one scan — a narrow, shuffle-free map at any corpus size."""
+    # local[4] sf0.1 A/B: 0.71 -> 0.43 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     t = F.concat(
         F.col("text"),
         F.lit(" Contact user"),
@@ -1719,7 +1721,8 @@ def text_rolling_fingerprint(spark, sf_dir):
     (base 257, mod 2^31-1, k=7) over the normalized text — the literal
     rolling-hash fingerprint next to the min-md5 winnowing variant
     (text_fingerprint). Exact BIGINT arithmetic in both engines."""
-    docs = spread_input(load(spark, sf_dir, "documents"))
+    # local[4] sf0.01 A/B: 9.63 -> 3.36 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", ts.rolling_fingerprint("text").alias("fingerprint")
     )
@@ -1800,7 +1803,8 @@ _MINHASH_CTES = f"""sh AS (
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash → LSH banding → exact-Jaccard verify (shingle n=3,
     8 hashes, 4 bands × 2 rows, t=0.2)."""
-    docs = load(spark, sf_dir, "documents")
+    # local[4] sf0.1 A/B: 6.05 -> 3.43 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     return dedup.minhash_lsh_dedup(
         docs, "doc_id", "text", shingle_n=3, bands=4, rows_per_band=2,
         threshold=0.2,
@@ -2031,7 +2035,8 @@ def dedup_neardup_clusters(spark, sf_dir):
     deterministic for the oracle; production loops to fixpoint."""
     from ..operators.graph import label_propagation_min
 
-    docs = load(spark, sf_dir, "documents")
+    # local[4] sf0.1 A/B: 10.59 -> 6.84 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     # materialize ONCE: the label rounds embed the edge frame every
     # round (and reference it twice per round via the undirected union),
     # so without a leaf here the full MinHash/LSH/Jaccard lineage is
@@ -2080,7 +2085,8 @@ def dedup_neardup_apply(spark, sf_dir):
     two small columns) and the corpus never shuffles."""
     from ..operators.graph import label_propagation_min
 
-    docs = load(spark, sf_dir, "documents")
+    # local[4] sf0.1 A/B: 9.99 -> 6.45 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     # materialize ONCE: the label rounds embed the edge frame every
     # round (and reference it twice per round via the undirected union),
     # so without a leaf here the full MinHash/LSH/Jaccard lineage is
@@ -2140,7 +2146,8 @@ def dedup_neardup_apply(spark, sf_dir):
 )
 def dedup_ngram_jaccard(spark, sf_dir):
     """Brute-force n-gram Jaccard within a blocking key (source)."""
-    docs = load(spark, sf_dir, "documents")
+    # local[4] sf0.1 A/B: 11.51 -> 8.01 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     return dedup.ngram_jaccard_pairs(
         docs, block_col="source", id_col="doc_id", text_col="text",
         shingle_n=3, threshold=0.05,
@@ -2173,7 +2180,8 @@ def _simhash_oracle(bits: int = 16) -> str:
 @register("dedup_simhash", _simhash_oracle(16))
 def dedup_simhash(spark, sf_dir):
     """SimHash (16-bit, bitwise token-hash majority) per document."""
-    docs = load(spark, sf_dir, "documents")
+    # local[4] sf0.1 A/B: 0.95 -> 0.69 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     return dedup.simhash(docs, "doc_id", "text", bits=16)
 
 
@@ -2206,7 +2214,8 @@ def dedup_simhash_pairs(spark, sf_dir):
     (hd ≤ 3 covers most of the space); 32 bits make d ≤ 3 a genuine
     near-duplicate signal AND shrink the candidate join's buckets
     (256-way per chunk)."""
-    docs = load(spark, sf_dir, "documents")
+    # local[4] sf0.1 A/B: 1.82 -> 1.56 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     return dedup.simhash_pairs(
         docs, "doc_id", "text", bits=32, chunks=4, max_hamming=3
     )
@@ -2413,7 +2422,8 @@ def emb_neardup_pairs(spark, sf_dir):
     """Embedding near-dup via banded random-hyperplane LSH (4 bands × 2
     bits, computed buckets — no pre-existing partition column), hot-cell
     cap, exact cosine verify ≥ 0.35."""
-    emb = load(spark, sf_dir, "embeddings")
+    # local[4] sf0.1 A/B: 3.89 -> 3.29 s median pair, 10/10 wins
+    emb = _load_wide(spark, sf_dir, "embeddings")
     return similarity.neardup_pairs(
         emb, threshold=0.35, planes=_RH_PLANES, bands=4, rows_per_band=2,
         cell_cap=_RH_CELL_CAP,
@@ -2471,7 +2481,8 @@ def ann_ivf_assign(spark, sf_dir):
     smallest centroid id. Pure Column arithmetic (fused projection, no
     UDF/shuffle); at scale ``list_id`` is the table's partition key —
     the IVF analog of the LSH signature-prefix layout."""
-    emb = load(spark, sf_dir, "embeddings")
+    # local[4] sf0.1 A/B: 0.64 -> 0.55 s median pair, 10/10 wins
+    emb = _load_wide(spark, sf_dir, "embeddings")
     return similarity.ivf_assign(emb, _IVF_CENTROIDS).select(
         "vec_id", "list_id"
     )
@@ -2510,7 +2521,8 @@ def emb_semantic_dedup(spark, sf_dir):
     cosine only within a cluster, drop every vector with an earlier
     similar cluster-mate. The oracle replays assignment + the blocked
     pair join + the drop rule in SQL."""
-    emb = load(spark, sf_dir, "embeddings")
+    # local[4] sf0.1 A/B: 4.71 -> 2.65 s median pair, 10/10 wins
+    emb = _load_wide(spark, sf_dir, "embeddings")
     return similarity.semantic_dedup(
         emb, threshold=0.35, centroids=_IVF_CENTROIDS
     )
@@ -2596,7 +2608,8 @@ def emb_kmeans(spark, sf_dir):
     update, empty clusters keep their centroid), final assignment. Per
     round the Spark side runs ONE map-side-combined groupBy(cluster,
     dim) job and collects exactly k·64 summary rows."""
-    emb = load(spark, sf_dir, "embeddings")
+    # local[4] sf0.1 A/B: 1.35 -> 1.21 s median pair, 9/10 wins
+    emb = _load_wide(spark, sf_dir, "embeddings")
     return similarity.kmeans_int(
         emb, k=_KMEANS_K, rounds=_KMEANS_ROUNDS
     )
@@ -2730,7 +2743,8 @@ def ann_pq_encode(spark, sf_dir):
     unrolled-chain negative result), argmin via
     array_position(array_min) with the explicit smallest-code tie
     rule."""
-    emb = load(spark, sf_dir, "embeddings")
+    # local[4] sf0.1 A/B: 1.85 -> 1.51 s median pair, 10/10 wins
+    emb = _load_wide(spark, sf_dir, "embeddings")
     enc = similarity.pq_encode(emb, _PQ_CB)
     return enc.select(
         "vec_id",
@@ -2786,7 +2800,8 @@ def ann_pq_topk(spark, sf_dir):
     recomputes the lookup table in SQL from the same baked codebooks —
     driver-side and SQL LUTs agree by the _py_norm accumulation
     discipline."""
-    emb = load(spark, sf_dir, "embeddings")
+    # local[4] sf0.1 A/B: 2.02 -> 1.91 s median pair, 9/10 wins
+    emb = _load_wide(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 5).select("embedding").collect()[0][0]
     return similarity.pq_topk(emb, list(qvec), _PQ_CB, k=10, shortlist=50)
 
@@ -4017,7 +4032,8 @@ def text_bpe_tokenize(spark, sf_dir):
     character segmentation via the LEFT join on both engines."""
     from ..operators.tokenizer import bpe_segment_words
 
-    docs = load(spark, sf_dir, "documents")
+    # local[4] sf0.1 A/B: 0.33 -> 0.29 s median pair, 9/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     return bpe_segment_words(docs, _bpe_model(spark, sf_dir))
 
 
@@ -4046,7 +4062,8 @@ def text_bpe_encode(spark, sf_dir):
     order."""
     from ..operators.tokenizer import bpe_encode
 
-    docs = load(spark, sf_dir, "documents")
+    # local[4] sf0.1 A/B: 1.88 -> 1.32 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     return bpe_encode(docs, _bpe_model(spark, sf_dir))
 
 
@@ -4090,7 +4107,8 @@ def text_pack_ids(spark, sf_dir):
     from ..operators.tokenizer import bpe_encode
     from ..operators.training import pack_token_ids
 
-    docs = load(spark, sf_dir, "documents")
+    # local[4] sf0.1 A/B: 3.92 -> 3.43 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     enc = bpe_encode(docs, _bpe_model(spark, sf_dir))
     return pack_token_ids(enc, ["doc_id"], budget=512)
 
@@ -4134,10 +4152,6 @@ def text_token_budget_sample(spark, sf_dir):
     oracle's per-source SQL window would do."""
     from ..operators.training import token_budget_sample
 
-    # no spread: the per-row work is ONE token count and the prefix sum
-    # range-shuffles anyway — measured 0.73 -> 0.86 s WITH a spread
-    # exchange at sf0.1 (r6), so the extra stage costs more than the
-    # parallel tokenize saves here
     docs = load(spark, sf_dir, "documents")
     toks = ts.word_tokens("text")
     base = docs.select(
@@ -4269,10 +4283,9 @@ def text_bm25_topk(spark, sf_dir):
     (N, Σdl, per-term df); pass 2 broadcasts that row back and scores
     each doc independently; TakeOrderedAndProject keeps k rows per
     partition. idf is the Robertson odds ratio without the log —
-    monotone-identical ranking, and bit-exact cross-engine (no libm).
-    The per-row tf/dl array filters are interpreted and feed BOTH passes
-    — adaptively spread the 1-split local scan first."""
-    docs = spread_input(load(spark, sf_dir, "documents"))
+    monotone-identical ranking, and bit-exact cross-engine (no libm)."""
+    # local[4] sf0.1 A/B: 1.12 -> 0.86 s median pair, 10/10 wins
+    docs = _load_wide(spark, sf_dir, "documents")
     toks = ts.word_tokens("text")
     def tf_col(term: str) -> F.Column:
         # NB: a 2-arg lambda would make F.filter pass (element, index) —

@@ -416,18 +416,37 @@ def test_ann_ivf_layout_partition_pruning(spark, tmp_path):
 
 def test_training_ops_physical_plans(spark):
     """The round-4 training-prep operators' scale contracts, pinned:
-    repetition/rebalance are shuffle-free scans, decontamination joins
-    broadcast (never sort-merge), packing's only window partitions by
-    the physical pid (no single-partition exchange) and stays JVM."""
+    repetition is a per-row map and rebalance a shuffle-free scan,
+    decontamination joins broadcast (never sort-merge), packing's only
+    window partitions by the physical pid (no single-partition
+    exchange) and stays JVM."""
+    from basic_common_crawl_pipeline_spark.operators.dedup import shingle_table
+    from basic_common_crawl_pipeline_spark.operators.training import decontaminate
     from basic_common_crawl_pipeline_spark.plans.catalog import QUERIES
 
-    # r6: the adaptive input spread (operators/spread.py) widens the
-    # degenerate 1-split local scan with ONE round-robin exchange; the
-    # scale contract is unchanged — no data-dependent (hash) shuffle,
-    # no Python crossing, and a many-split input takes no exchange.
+    # Operators run at the width their input arrives with: a 1-file
+    # parquet at shuffle width > 1 is not repartitioned by the operator
+    # (widening a fixture is the catalog loader's call, _load_wide).
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    assert len(docs.inputFiles()) == 1
+    p = _plan(
+        decontaminate(
+            docs.filter("doc_id % 17 != 0"), docs.filter("doc_id % 17 = 0")
+        )
+    )
+    assert "RoundRobinPartitioning" not in p
+    p = _plan(shingle_table(docs))
+    assert "RoundRobinPartitioning" not in p
+    assert "hashpartitioning(doc_id" not in p  # none below the explode
+
+    # text_repetition widens its fixture in the loader: exactly ONE
+    # round-robin exchange; otherwise no data-dependent (hash) shuffle
+    # and no Python crossing.
     p = _plan(QUERIES["text_repetition"](spark, SF))
+    assert p.count("RoundRobinPartitioning") == 1
     assert "hashpartitioning" not in p and "MapInPandas" not in p
-    assert p.count("Exchange") <= 1
+    assert p.count("Exchange") == 1
 
     p = _plan(QUERIES["text_sample_rebalance"](spark, SF))
     assert "Exchange" not in p and "PushedFilters" in p
@@ -444,8 +463,8 @@ def test_training_ops_physical_plans(spark):
     assert "MapInPandas" not in p and "ArrowEvalPython" not in p
 
     # PII redaction is a narrow map over the scan: no data-dependent
-    # shuffle (the adaptive spread's round-robin widens the 1-split
-    # local scan only), all JVM
+    # shuffle (the loader's round-robin widening is the only exchange),
+    # all JVM
     p = _plan(QUERIES["text_pii_redact"](spark, SF))
     assert "hashpartitioning" not in p
     assert p.count("Exchange") <= 1
@@ -465,8 +484,8 @@ def test_training_ops_physical_plans(spark):
     assert "BroadcastHashJoin" in p and "SortMergeJoin" not in p
 
     # PQ encode is a narrow compressed-encoding map: no data-dependent
-    # shuffle (adaptive spread round-robins the 1-split local scan
-    # only), no UDF
+    # shuffle (the loader's round-robin widening is the only exchange),
+    # no UDF
     p = _plan(QUERIES["ann_pq_encode"](spark, SF))
     assert "hashpartitioning" not in p
     assert p.count("Exchange") <= 1

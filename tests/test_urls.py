@@ -49,6 +49,15 @@ TRICKY = [
     "http://../a",
     "http://.../",
     "http://.:8080/x",
+    # whitespace before a dropped fragment stays in the canonical form;
+    # the composed surt re-strips (and re-normalizes) it
+    "http://h/p #f",
+    "http://h/p\u3000#f",
+    "http://h/p\xa0#f",
+    "http://h/p?q #f",
+    "http://h/p/.. #f",
+    "http://h:8080/ #f",
+    "http://h/p ?q#f",
 ]
 
 
@@ -69,10 +78,12 @@ def test_fused_idempotent_on_canonical():
     # canonicalizes to "http:///" which re-canonicalizes to None — the
     # composition itself is non-idempotent there, and the engine (like
     # the oracle) canonicalizes each URL exactly once, so only the
-    # host-bearing forms ever make the round trip
+    # host-bearing forms ever make the round trip. The same holds for a
+    # canonical form ending in whitespace (kept from before a dropped
+    # '#'): re-canonicalizing strips it.
     for url in TRICKY:
         canon, host, key = canon_host_surt(url)
-        if canon is not None and host is not None:
+        if canon is not None and host is not None and canon == canon.strip():
             assert canon_host_surt(canon) == (canon, host, key), url
 
 
