@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import local_frame
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -240,4 +242,4 @@ def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
     for i in range(n):
         payload = hashlib.sha256(f"{seed}:{i}".encode()).digest() * (1 + i % 7)
         rows.append((i, kinds[i % 3], bytearray(payload)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)

@@ -25,12 +25,11 @@ API.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
+
+from ..session import local_frame
 
 
 def check_pid_layout(parted: DataFrame, n_parts: int, seen_pids) -> None:
@@ -116,36 +115,29 @@ def global_seq_assign(
 ) -> DataFrame:
     """Phase 2: given ``{__pid: row_count}`` (from any counting job over
     ``sorted_df``), prefix-sum the offsets on the driver and add
-    ``seq_col`` in a narrow (partition-local) mapInPandas pass. Range
+    ``seq_col`` in a narrow (partition-local) JVM projection. Range
     partitions are ascending in ``__pid``, so prefix-summing in pid order
-    yields the global rank."""
+    yields the global rank.
+
+    ``monotonically_increasing_id()`` is ``(partition index << 33) +
+    row index within the partition``, so subtracting the partition's
+    shifted index leaves the local rank in the partition's sorted order;
+    the offsets travel as one literal map keyed by ``__pid``."""
     fields = [f for f in sorted_df.schema.fields if f.name != "__pid"]
-    names = [f.name for f in fields]
-    # StructType.add mutates in place — build a fresh copy for the output.
-    schema = StructType(fields + [StructField(seq_col, LongType())])
-    offsets: dict[int, int] = {}
+    if not pid_counts:
+        # StructType.add mutates in place — build a fresh copy.
+        schema = StructType(fields + [StructField(seq_col, LongType())])
+        return local_frame(sorted_df.sparkSession, [], schema)
+    entries = []
     acc = start
     for pid in sorted(pid_counts):
-        offsets[pid] = acc
+        entries.append(f"{int(pid)}, {acc}L")
         acc += pid_counts[pid]
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Rows of one physical partition arrive across possibly several
-        # batches, in sorted order; number them consecutively.
-        local = 0
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            pid = int(batch["__pid"].iloc[0])
-            base = offsets[pid] + local
-            out = batch[names].copy()
-            out[seq_col] = range(base, base + len(batch))
-            local += len(batch)
-            yield out
-
-    # NB: mapInPandas preserves the per-partition sort because it is a
-    # narrow (partition-local) transformation.
-    return sorted_df.mapInPandas(assign, schema=schema)
+    seq = F.expr(
+        f"map({', '.join(entries)})[__pid] + (monotonically_increasing_id()"
+        " - shiftleft(cast(spark_partition_id() AS BIGINT), 33))"
+    )
+    return sorted_df.select(*[f.name for f in fields], seq.alias(seq_col))
 
 
 def with_global_seq(

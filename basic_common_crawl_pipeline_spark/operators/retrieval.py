@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import round4
 from ..functions.textstats import word_tokens
+from ..session import local_frame
 
 # k1=1.2, b=0.75 — pinned as the EXACT double literals 2.2 / 1.2 /
 # 0.25 / 0.75 (not computed: 1.2 + 1.0 rounds to a different ulp than
@@ -131,7 +132,7 @@ def term_buckets(
     """Bucket ids for the query terms — the SAME xxhash64 the writer
     used, evaluated on a #terms-row literal frame (metadata, not data;
     there is no driver-side xxhash64 twin to drift from)."""
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+    tdf = local_frame(spark, [(t,) for t in terms], "term string")
     return {
         r["term"]: r["b"]
         for r in tdf.select(

@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import local_frame
+
 BLOB_SCHEMA = StructType(
     [StructField("part", IntegerType()), StructField("bits", BinaryType())]
 )
@@ -69,7 +71,7 @@ class BloomSeen:
 
     def empty(self, spark: SparkSession) -> DataFrame:
         rows = [(p, bytearray(self.m_bits // 8)) for p in range(self.partitions)]
-        return spark.createDataFrame(rows, BLOB_SCHEMA)
+        return local_frame(spark, rows, BLOB_SCHEMA)
 
     def _with_part(self, urls: DataFrame, url_col: str) -> DataFrame:
         h = F.xxhash64(F.col(url_col))

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from .ordering import check_pid_layout
 
 
@@ -318,7 +319,7 @@ def asof_join(
             for c, o in zip(value_cols, out_vals)
         ]
     )
-    carry_df = spark.createDataFrame(carry_rows, schema=carry_schema)
+    carry_df = local_frame(spark, carry_rows, carry_schema)
 
     # phase B: partition-local LOCF — window over __pid (bounded by
     # partition size), carrying the last right row as ONE struct whose

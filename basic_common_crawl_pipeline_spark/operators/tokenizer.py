@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textstats import word_tokens
+from ..session import local_frame
 
 
 def word_frequency_table(
@@ -214,8 +215,8 @@ def bpe_train(
         merges, table = _bpe_train_local(
             wf.select("word", "freq", "syms").collect(), num_merges
         )
-        words = spark.createDataFrame(
-            table, "word string, freq bigint, syms array<string>"
+        words = local_frame(
+            spark, table, "word string, freq bigint, syms array<string>"
         ).persist()
         if cache is not None:
             cache.append(words)
@@ -372,7 +373,8 @@ def bpe_encode(
     if vocab is None:
         vocab = bpe_vocab(words)
     spark = corpus.sparkSession
-    vocab_df = spark.createDataFrame(
+    vocab_df = local_frame(
+        spark,
         [(p, i) for i, p in enumerate(vocab)],
         "piece string, piece_id bigint",
     )

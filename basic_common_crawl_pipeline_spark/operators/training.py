@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.textstats import word_ngrams, word_tokens
+from ..session import local_frame
 from .ordering import check_pid_layout
 
 
@@ -220,9 +221,7 @@ def keyed_prefix_sum(
         acc[k] = acc.get(k, 0) + int(row["__v"] or 0)
     dtypes = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     fields = ["__pid int"] + [f"{c} {dtypes[c]}" for c in key_cols]
-    base_df = spark.createDataFrame(
-        bases, ", ".join(fields + ["__base long"])
-    )
+    base_df = local_frame(spark, bases, ", ".join(fields + ["__base long"]))
 
     local = (
         Window.partitionBy("__pid", *key_cols)

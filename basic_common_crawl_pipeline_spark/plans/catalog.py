@@ -23,6 +23,7 @@ from ..functions.numeric import SQL_CENTS, round4
 from ..operators import dedup, similarity
 from ..operators.ordering import with_global_seq
 from ..operators.politeness import select_per_host_topk
+from ..session import local_frame
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -3966,7 +3967,8 @@ def text_bpe_train(spark, sf_dir):
     )
     for f in cache:  # merges are driver-side already; nothing lazy left
         f.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r, a, b, a + b, c) for r, a, b, c in merges],
         "rank bigint, left_sym string, right_sym string, "
         "merged string, freq bigint",

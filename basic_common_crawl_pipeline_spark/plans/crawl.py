@@ -16,6 +16,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
 from ..sources.snapshots import SnapshotStore
 from .config import CrawlConfig
 from .wave import WaveOutput, empty_seen, frontier_from_seeds, run_wave
@@ -62,7 +63,7 @@ def metrics_table(spark: SparkSession, metrics: list[dict]) -> DataFrame:
     rust/src/tracing_and_metrics.rs:5-20)."""
     cols = [c.split()[0] for c in _METRICS_SCHEMA.split(", ")]
     rows = [tuple(m.get(c) for c in cols) for m in metrics]
-    return spark.createDataFrame(rows, _METRICS_SCHEMA)
+    return local_frame(spark, rows, _METRICS_SCHEMA)
 
 
 def metrics_prometheus_text(metrics: list[dict], prefix: str = "crawl") -> str:

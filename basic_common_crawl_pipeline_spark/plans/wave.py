@@ -42,6 +42,7 @@ from ..functions.links import extract_links_rich
 from ..functions.urls import canon_host_surt
 from ..operators.ordering import global_seq_assign, global_seq_sorted
 from ..operators.politeness import rank_per_host_topk
+from ..session import local_frame
 from .config import CrawlConfig
 
 _LINK_STRUCT = StructType(
@@ -170,7 +171,7 @@ def frontier_from_seeds(seeds: DataFrame, parallelism: int | None = None) -> Dat
 
 
 def empty_seen(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], "canon_url string")
+    return local_frame(spark, [], "canon_url string")
 
 
 @dataclass

@@ -155,6 +155,8 @@ def corpus_to_spark(spark, corpus: SynthCorpus):
         TimestampType,
     )
 
+    from ..session import local_frame
+
     pages_schema = StructType(
         [
             StructField("url", StringType()),
@@ -181,15 +183,18 @@ def corpus_to_spark(spark, corpus: SynthCorpus):
             StructField("disallow", ArrayType(StringType())),
         ]
     )
-    pages = spark.createDataFrame(
+    pages = local_frame(
+        spark,
         [tuple(p[f.name] for f in pages_schema.fields) for p in corpus.pages],
         pages_schema,
     )
-    seeds = spark.createDataFrame(
+    seeds = local_frame(
+        spark,
         [tuple(s[f.name] for f in seeds_schema.fields) for s in corpus.seeds],
         seeds_schema,
     )
-    robots = spark.createDataFrame(
+    robots = local_frame(
+        spark,
         [tuple(r[f.name] for f in robots_schema.fields) for r in corpus.robots],
         robots_schema,
     )

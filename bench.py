@@ -26,12 +26,16 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
 
     from basic_common_crawl_pipeline_spark.plans import catalog
     from basic_common_crawl_pipeline_spark.plans.config import CrawlConfig
     from basic_common_crawl_pipeline_spark.plans.crawl import run_crawl
-    from basic_common_crawl_pipeline_spark.session import get_spark
+    from basic_common_crawl_pipeline_spark.session import (
+        get_spark,
+        heap_from_available,
+    )
+
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", heap_from_available())
 
     spark = get_spark(
         app_name="bench", master=f"local[{cpus}]",

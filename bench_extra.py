@@ -29,8 +29,12 @@ TRIALS = int(os.environ.get("BENCH_EXTRA_TRIALS", "3"))
 
 
 def get_session():
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
-    from basic_common_crawl_pipeline_spark.session import get_spark
+    from basic_common_crawl_pipeline_spark.session import (
+        get_spark,
+        heap_from_available,
+    )
+
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", heap_from_available())
 
     spark = get_spark(
         app_name="bench_extra", master=f"local[{CPUS}]",

@@ -79,7 +79,6 @@ def run_bench(cpus: int, sf_dir: str) -> dict:
         SPARK_GRAFT_BIGWAVE_REPLICATE=os.environ.get(
             "SCALING_BIGWAVE_REPLICATE", "300"
         ),
-        SPARK_DRIVER_MEMORY=os.environ.get("SPARK_DRIVER_MEMORY", "24g"),
     )
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from basic_common_crawl_pipeline_spark.operators.dedup import (
     exact_dedup,
@@ -15,7 +16,11 @@ from basic_common_crawl_pipeline_spark.operators.multimodal import (
     extract_media_features,
     synth_media,
 )
-from basic_common_crawl_pipeline_spark.operators.ordering import with_global_seq
+from basic_common_crawl_pipeline_spark.operators.ordering import (
+    global_seq_assign,
+    global_seq_sorted,
+    with_global_seq,
+)
 from basic_common_crawl_pipeline_spark.operators.politeness import (
     select_per_host_topk,
 )
@@ -33,6 +38,45 @@ def test_global_seq_equals_window_rank(spark):
     assert sorted((r.k, r.v, r.seq) for r in got) == sorted(
         (r.k, r.v, r.seq) for r in want
     )
+
+    def check(src, sorted_df, start=1):
+        counts = {
+            r["__pid"]: r["count"]
+            for r in sorted_df.groupBy("__pid").count().collect()
+        }
+        got = global_seq_assign(sorted_df, counts, start=start)
+        want = src.withColumn(
+            "seq",
+            F.row_number().over(Window.orderBy("k", "v")) + F.lit(start - 1),
+        )
+        assert got.columns == ["k", "v", "seq"]
+        assert got.schema["seq"].dataType == LongType()
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.select("k", "v", "seq").collect())
+        )
+        return counts
+
+    check(df, global_seq_sorted(df, ["k", "v"]), start=101)
+    counts = check(
+        df, global_seq_sorted(df, ["k", "v"], single_partition=True), start=7
+    )
+    assert list(counts) == [0]
+    # 3 distinct range keys over 8 explicit partitions: at least 5 are
+    # empty, so the offsets skip pids
+    skewed = df.withColumn("k", F.col("k") % 3)
+    parted = (
+        skewed.repartitionByRange(8, "k")
+        .sortWithinPartitions("k", "v")
+        .withColumn("__pid", F.spark_partition_id())
+        .persist()
+    )
+    try:
+        counts = check(skewed, parted, start=5)
+        assert 0 < len(counts) < 8, counts
+    finally:
+        parted.unpersist()
+    empty = df.filter(F.col("k") < 0)
+    assert check(empty, global_seq_sorted(empty, ["k", "v"])) == {}
 
 
 def test_politeness_topk_equals_window_topk(spark):

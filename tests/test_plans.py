@@ -749,3 +749,66 @@ def test_wave_fetch_join_over_bucketed_pages_drops_exchanges(spark, tmp_path):
         assert bk_rows == plain_rows and len(bk_rows) > 0
     finally:
         drop_bucketed_table(spark, "bk_wave_pages")
+
+
+def test_driver_held_rows_are_local_table_scans(spark):
+    """Driver-held rows never reach a Python worker: ``empty_seen``,
+    ``metrics_table`` and ``local_frame`` plan as a JVM LocalTableScan,
+    where ``createDataFrame(<list>)`` is a Python RDD (``Scan
+    ExistingRDD``) that starts one Python task per partition on every
+    scan — and they hold exactly the rows the list path held."""
+    from basic_common_crawl_pipeline_spark.plans.crawl import (
+        _METRICS_SCHEMA,
+        metrics_table,
+    )
+    from basic_common_crawl_pipeline_spark.plans.wave import empty_seen
+    from basic_common_crawl_pipeline_spark.session import local_frame
+
+    metrics = [
+        {"wave": 0, "candidates": 5, "selected": 3, "frontier_size": 9},
+        {"wave": 1, "selected": 2, "frontier_size": 0},
+    ]
+    cols = [c.split()[0] for c in _METRICS_SCHEMA.split(", ")]
+    schema = "id bigint, tags array<string>, blob binary, n bigint"
+    rows = [
+        (1, ["a", "b"], bytearray(b"\x00\xff"), None),
+        (2, [], bytearray(b""), 7),
+        (3, None, None, None),
+    ]
+    cases = [
+        (empty_seen(spark), spark.createDataFrame([], "canon_url string")),
+        (
+            metrics_table(spark, metrics),
+            spark.createDataFrame(
+                [tuple(m.get(c) for c in cols) for m in metrics],
+                _METRICS_SCHEMA,
+            ),
+        ),
+        (local_frame(spark, rows, schema), spark.createDataFrame(rows, schema)),
+    ]
+    for df, listed in cases:
+        plan = _plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert df.schema == listed.schema
+        assert df.collect() == listed.collect()
+
+
+def test_global_seq_assign_runs_in_the_jvm(spark):
+    """The sequencer's assignment pass is a narrow JVM projection over
+    the sort, not a Python stage."""
+    from basic_common_crawl_pipeline_spark.operators.ordering import (
+        global_seq_assign,
+        global_seq_sorted,
+    )
+
+    df = spark.range(0, 100).select(
+        (F.col("id") % 3).alias("k"), F.col("id").alias("v")
+    )
+    sorted_df = global_seq_sorted(df, ["k", "v"])
+    counts = {
+        r["__pid"]: r["count"]
+        for r in sorted_df.groupBy("__pid").count().collect()
+    }
+    plan = _plan(global_seq_assign(sorted_df, counts))
+    for node in ("MapInPandas", "MapInArrow", "EvalPython"):
+        assert node not in plan, plan
