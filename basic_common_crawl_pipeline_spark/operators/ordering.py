@@ -27,9 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
-
-from ..session import local_frame
 
 
 def check_pid_layout(parted: DataFrame, n_parts: int, seen_pids) -> None:
@@ -122,22 +119,25 @@ def global_seq_assign(
     ``monotonically_increasing_id()`` is ``(partition index << 33) +
     row index within the partition``, so subtracting the partition's
     shifted index leaves the local rank in the partition's sorted order;
-    the offsets travel as one literal map keyed by ``__pid``."""
-    fields = [f for f in sorted_df.schema.fields if f.name != "__pid"]
+    the offsets travel as one literal map keyed by ``__pid``. A row whose
+    ``__pid`` has no offset (the layout drifted between the counting job
+    and this pass) fails the query instead of getting a NULL ``seq``."""
+    names = [c for c in sorted_df.columns if c != "__pid"]
     if not pid_counts:
-        # StructType.add mutates in place — build a fresh copy.
-        schema = StructType(fields + [StructField(seq_col, LongType())])
-        return local_frame(sorted_df.sparkSession, [], schema)
+        # no counted rows, so sorted_df is empty: a projection keeps the schema
+        return sorted_df.select(*names, F.lit(None).cast("long").alias(seq_col))
     entries = []
     acc = start
     for pid in sorted(pid_counts):
         entries.append(f"{int(pid)}, {acc}L")
         acc += pid_counts[pid]
     seq = F.expr(
-        f"map({', '.join(entries)})[__pid] + (monotonically_increasing_id()"
+        f"coalesce(map({', '.join(entries)})[__pid], raise_error(concat("
+        "'global_seq_assign: no offset for __pid ', __pid)))"
+        " + (monotonically_increasing_id()"
         " - shiftleft(cast(spark_partition_id() AS BIGINT), 33))"
     )
-    return sorted_df.select(*[f.name for f in fields], seq.alias(seq_col))
+    return sorted_df.select(*names, seq.alias(seq_col))
 
 
 def with_global_seq(

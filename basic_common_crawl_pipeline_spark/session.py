@@ -18,15 +18,15 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType, StructType, TimestampType
 
 
-def heap_from_available(cap_gib: int = 24) -> str:
+def heap_from_available() -> str:
     """A driver heap size for ``SPARK_DRIVER_MEMORY``: half of the
-    machine's ``MemAvailable`` in whole GiB, between 1 and ``cap_gib`` —
+    machine's ``MemAvailable`` in whole GiB, between 1 and 24 —
     the other half stays for the Python workers and the page cache."""
     with open("/proc/meminfo") as f:
         avail_kib = next(
             int(line.split()[1]) for line in f if line.startswith("MemAvailable:")
         )
-    return f"{max(1, min(cap_gib, avail_kib // (2 << 20)))}g"
+    return f"{max(1, min(24, avail_kib // (2 << 20)))}g"
 
 
 def get_spark(

@@ -3,6 +3,7 @@ and the streaming queue analog."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
@@ -73,6 +74,11 @@ def test_global_seq_equals_window_rank(spark):
     try:
         counts = check(skewed, parted, start=5)
         assert 0 < len(counts) < 8, counts
+        # a pid missing from the counts fails loudly, not as a NULL seq
+        missing = max(counts)
+        partial = {p: n for p, n in counts.items() if p != missing}
+        with pytest.raises(Exception, match=f"no offset for __pid {missing}"):
+            global_seq_assign(parted, partial).collect()
     finally:
         parted.unpersist()
     empty = df.filter(F.col("k") < 0)
